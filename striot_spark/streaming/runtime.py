@@ -500,9 +500,10 @@ def scan_stream(
     tiebreak: str | None = None,
     carry_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Streaming streamScan via transformWithStateInPandas (Spark 4
-    API) with an applyInPandasWithState fallback — see the section
-    comment above.
+    """Streaming streamScan via applyInPandasWithState; ``api="tws"``
+    requests the experimental transformWithStateInPandas lowering
+    instead (``api="auto"`` always runs applyInPandasWithState) — see
+    the section comment above.
 
     Per-key state (a single accumulator encoded in ``state_type``);
     events within a micro-batch are processed in event-time order
@@ -591,9 +592,10 @@ def filter_acc_stream(
     api: str = "auto",
     tiebreak: str | None = None,
 ) -> DataFrame:
-    """Streaming streamFilterAcc — TWS when available, else
-    applyInPandasWithState (see the stateful-operators section
-    comment).
+    """Streaming streamFilterAcc via applyInPandasWithState;
+    ``api="tws"`` requests the experimental transformWithStateInPandas
+    lowering instead (``api="auto"`` always runs applyInPandasWithState;
+    see the stateful-operators section comment).
 
     Exact reference semantics (``src/Striot/FunctionalProcessing.hs:
     181-185``): the predicate sees the accumulator *before* this event's
